@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * expressions for SQL use and its optimizer rules. Enable with
+  * expressions for SQL use. Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`.
   */
@@ -15,6 +15,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.ArrayDotProduct].getName,
         "graft_dot"),
       graft.functions.ArrayDotProduct.build _))
-    e.injectOptimizerRule(_ => graft.plans.KeepFirstToAggregate)
   }
 }

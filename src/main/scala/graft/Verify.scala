@@ -20,7 +20,11 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val root = Iterator.iterate(e)(_.getCause)
+          .takeWhile(_ != null).toSeq.last
+        System.err.println(s"[verify] $name failed: " +
+          s"${e.getClass.getName}: ${e.getMessage} " +
+          s"(root cause ${root.getClass.getName})")
         // remove any stale output from a previous run into the same dir —
         // the checker must see a MISSING result, not silently pass old data
         val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -109,15 +109,18 @@ object RangeJoin {
       .withColumn("__bucket", explode(sequence(
         floorDiv(col(lo), bucketWidth), floorDiv(col(hi), bucketWidth))))
     // the overlap-start rule in MULTIPLY form: `b == floor(start/w)` ⟺
-    // `b·w ≤ start < (b+1)·w` — two long multiply-compares per candidate
-    // pair instead of a division chain on the join's hottest expression
-    // (round 14; the candidate-pair count is the operator's whole cost)
+    // `b·w ≤ start` and `start − b·w < w` — one long multiply per
+    // candidate pair instead of a division chain on the join's hottest
+    // expression (round 14; the candidate-pair count is the operator's
+    // whole cost). floor(x/w)·w ≤ x, so `b·w` cannot pass Long.MaxValue;
+    // the offset form of the upper bound stays in range where `(b+1)·w`
+    // would (an ANSI overflow error in the last bucket).
     val start = greatest(col(leftLo), col(rightLo))
+    val lower = col("__bucket") * bucketWidth
     expand(left, leftLo, leftHi)
       .join(expand(right, rightLo, rightHi), Seq("__bucket"))
       .filter(col(leftLo) <= col(rightHi) && col(rightLo) <= col(leftHi))
-      .filter(col("__bucket") * bucketWidth <= start &&
-        start < (col("__bucket") + 1) * bucketWidth)
+      .filter(lower <= start && start - lower < bucketWidth)
       .drop("__bucket")
   }
 

@@ -238,7 +238,7 @@ object Profiling {
     // two scalar percentile_approx calls each build their own identical
     // sketch (the sketch state does not depend on the queried quantile,
     // so the values are bit-identical); measured 2x on the sketch pass
-    // at sf0.1 (ProfileProfiling: 1.30 -> 0.69 s)
+    // at sf0.1 (1.30 -> 0.69 s on the sketch pass alone)
     val aggs =
       (numCols ++ strCols).map(c =>
         approx_count_distinct(col(c), rsd = 0.02).as(s"${c}__nd")) ++
@@ -623,18 +623,27 @@ object Profiling {
     * and prove the selected rank unchanged. */
   final val BigBucketRows = 4L * 1000 * 1000
 
-  /** Shared core of q134/q135/q136 — EXACT order statistics without a
-    * global sort: classic two-level (plus one recursion level) bucketed
-    * rank selection. `vals` is a (g, v) frame of long-quantized values;
-    * `quantiles` are (label, num, den) fractions, target rank per group =
-    * ceil(num·n/den) computed in exact integer arithmetic. Pass 1
-    * histograms each group into `buckets` equi-width buckets (one
-    * map-side-combined aggregate, ≤ groups×buckets METADATA rows); a
+  /** EXACT order statistics without a global sort — the one rank-selection
+    * engine behind q18, q134-q137, q155, q156, q160, q163, q173, q177 and
+    * q179: classic two-level (plus one recursion level) bucketed rank
+    * selection over a (g, v, wt) frame. `v` is LONG or DOUBLE; `wt` is a
+    * POSITIVE integer weight (wt = 1 for the unweighted forms — zero or
+    * negative weights break the running-weight monotonicity the crossing
+    * rule needs). The order statistic at rank k is the smallest v whose
+    * cumulative weight reaches k — exactly the value the wt-times-expanded
+    * multiset's unweighted order statistic would give, at the cost of the
+    * COMPACT frame. `quantiles` are (label, num, den) fractions, target
+    * rank per group = ceil(num·W/den) of the group's total weight W, in
+    * exact integer arithmetic.
+    *
+    * Pass 1 sums weights per (group, equi-width bucket) — one
+    * map-side-combined aggregate, ≤ groups×buckets METADATA rows; a
     * running sum over those rows locates, per (group, quantile), the
     * bucket holding rank k and the residual rank within it. Pass 2
     * filters the corpus to the target buckets (scan-local predicate —
     * reads ~1/buckets of each group) and resolves the residual rank:
-    *  - bucket ≤ `bigBucket` rows → row_number in ONE task (bounded);
+    *  - bucket ≤ `bigBucket` ROWS → one running-weight window in ONE
+    *    task (bounded);
     *  - bigger → re-histogram the bucket into `buckets` sub-buckets
     *    (another metadata aggregate) and rank only the target SUB-bucket
     *    — a further `buckets`× cut, so a straggler needs a single bucket
@@ -642,90 +651,146 @@ object Profiling {
     *  - target sub-bucket holding ONE distinct value (the heavy-key skew
     *    that defeats any equi-width cut) → the order statistic IS that
     *    value, answered from bucket metadata with no corpus task at all.
-    * The small/big branch is decided DRIVER-side from the collected
-    * bucket targets — ≤ groups×quantiles rows of index metadata (the
+    * Every level keeps the unique row whose running weight crosses its
+    * rank: `cum >= r && cum - step < r` (with wt = 1 inside a bucket that
+    * is `row_number = r`).
+    *
+    * Bucket arithmetic follows the type of `v` ([[BucketArith]]). The
+    * small/big branch is decided DRIVER-side from the collected bucket
+    * targets — ≤ groups×quantiles rows of index metadata (the
     * probeIvfIndex collect class; group stats literalize the same way,
-    * saving a redundant aggregate subtree per pass) — so the common case
-    * builds exactly the two-pass plan with ZERO recursive overhead
-    * (declarative always-present union branches measured +60% on q134:
-    * each empty branch still re-scanned the corpus), and only genuinely
-    * oversize buckets pay the sub-histogram passes. Contract: `g` is a
-    * LOW-cardinality group key (event types, sources) — the collects are
-    * bounded by groups×quantiles. Oracles are ALGORITHM-INDEPENDENT flat
-    * `row_number() = k` sorts — affordable at gate scale, which is
-    * exactly what proves the bucketed path exact (the q84/q87 pattern). */
+    * saving a redundant aggregate subtree per pass) — so the
+    * common case builds exactly the two-pass plan with ZERO recursive
+    * overhead (declarative always-present union branches measured +60% on
+    * q134: each empty branch still re-scanned the corpus), and only
+    * genuinely oversize buckets pay the sub-histogram passes. Contract:
+    * `g` is a LOW-cardinality group key (event types, sources) — the
+    * collects are bounded by groups×quantiles; DOUBLE values are finite
+    * (no NaN; −0.0 and 0.0 are not distinguished). Oracles are
+    * ALGORITHM-INDEPENDENT flat `row_number() = k` sorts — affordable at
+    * gate scale, which is exactly what proves the bucketed path exact
+    * (the q84/q87 pattern). */
   import graft.functions.Frames.{frameOf, literalize}
 
-  /** Per-group count/min/max/bucket-width, collected and re-emitted as a
-    * literal frame (≤ groups rows of metadata) so later passes broadcast
-    * values instead of recomputing the aggregate subtree. */
-  private def groupStats(vals: org.apache.spark.sql.DataFrame,
-      buckets: Int): org.apache.spark.sql.DataFrame =
-    literalize(
-      vals.groupBy("g").agg(count(lit(1)).as("n"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w", expr(s"greatest(1L, (vmax - vmin) div ${buckets}L + 1L)")))
+  /** The engine's bucket arithmetic, picked from the type of `v`: the
+    * group's bucket `width` from (vmin, vmax), the first-level `bucket`
+    * id, the `subWidth` from w and the `subBucket` id inside target
+    * bucket `tb`. LONG values use exact `div` arithmetic. DOUBLE values
+    * use `floor(… / w)`, with `greatest(…, MIN_NORMAL)` keeping the width
+    * positive when a group holds a single distinct value (bucket 0 for
+    * every row): FP rounding can only move a bucket BOUNDARY, never
+    * reorder values — bucket ids stay monotone in v, which is the only
+    * property the running-weight location needs. */
+  private final case class BucketArith(width: Column, bucket: Column,
+      subWidth: Column, subBucket: Column)
 
-  private[graft] def bucketedQuantileSelect(
-      vals: org.apache.spark.sql.DataFrame,
+  private def bucketArith(vals: DataFrame, buckets: Int): BucketArith = {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    vals.schema("v").dataType match {
+      case LongType => BucketArith(
+        expr(s"greatest(1L, (vmax - vmin) div ${buckets}L + 1L)"),
+        expr("(v - vmin) div w"),
+        expr(s"greatest(1L, (w - 1L) div ${buckets}L + 1L)"),
+        expr("(v - vmin - tb * w) div w2"))
+      case DoubleType =>
+        val minNormal = lit(java.lang.Double.MIN_NORMAL)
+        BucketArith(
+          greatest((col("vmax") - col("vmin")) / lit(buckets.toDouble),
+            minNormal),
+          floor((col("v") - col("vmin")) / col("w")).cast("long"),
+          greatest(col("w") / lit(buckets.toDouble), minNormal),
+          floor((col("v") - (col("vmin") + col("tb") * col("w"))) /
+            col("w2")).cast("long"))
+      case other => throw new IllegalArgumentException(
+        s"rank selection needs a LONG or DOUBLE value column, got $other")
+    }
+  }
+
+  /** Per-group total weight `n`, min/max and bucket width, collected and
+    * re-emitted as a literal frame (≤ groups rows of metadata) so later
+    * passes broadcast values instead of recomputing the aggregate
+    * subtree. */
+  private def groupStats(vals: DataFrame, buckets: Int): DataFrame =
+    literalize(
+      vals.groupBy("g").agg(sum(col("wt")).as("n"),
+          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
+        .withColumn("w", bucketArith(vals, buckets).width))
+
+  /** A (g, v) frame as the engine's unit-weight (g, v, wt) frame. */
+  private def unitWeight(vals: DataFrame): DataFrame =
+    vals.select(col("g"), col("v"), lit(1L).as("wt"))
+
+  /** Order statistics of a (g, v) frame: (g, q, n, k, v) per group and
+    * quantile. */
+  private[graft] def bucketedQuantileSelect(vals: DataFrame,
       quantiles: Seq[(String, Long, Long)], buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
+      bigBucket: Long): DataFrame =
+    quantileSelect(unitWeight(vals), quantiles, buckets, bigBucket)
+
+  /** WEIGHTED order statistics of a (g, v, wt) frame: (g, q, wtot, k, v)
+    * per group and quantile; `wtot` is the group's total weight. */
+  private[graft] def weightedQuantileSelect(vals: DataFrame,
+      quantiles: Seq[(String, Long, Long)], buckets: Int,
+      bigBucket: Long): DataFrame =
+    quantileSelect(vals.select("g", "v", "wt"), quantiles, buckets,
+      bigBucket).withColumnRenamed("n", "wtot")
+
+  private def quantileSelect(vals: DataFrame,
+      quantiles: Seq[(String, Long, Long)], buckets: Int,
+      bigBucket: Long): DataFrame = {
     val spark = vals.sparkSession
     import spark.implicits._
-    val qdf = quantiles.toDF("q", "num", "den")
     val stats = groupStats(vals, buckets)
-    val ranks = stats.crossJoin(qdf)
+    val ranks = stats.crossJoin(quantiles.toDF("q", "num", "den"))
       .select(col("g"), col("q"), col("n"),
         expr("(num * n + den - 1L) div den").as("k"))
     selectAtRanks(vals, stats, ranks, buckets, bigBucket)
   }
 
-  /** The selection engine behind [[bucketedQuantileSelect]] (and the
-    * interpolating [[groupedPercentilesScalable]], which needs TWO
-    * explicit ranks per quantile): resolves each (g, q, k) row of `ranks`
-    * to the exact k-th order statistic of its group. `stats` must be the
-    * [[groupStats]] literal frame for the same `vals`/`buckets`. */
-  private def selectAtRanks(
-      vals: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame, buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
+  /** Resolves each (g, q, n, k) row of `ranks` to the exact k-th order
+    * statistic of its group (callers needing explicit ranks — the
+    * interpolating forms fetch TWO per quantile — build `ranks`
+    * themselves). `stats` must be the [[groupStats]] literal frame for
+    * the same `vals`/`buckets`. */
+  private def selectAtRanks(vals: DataFrame, stats: DataFrame,
+      ranks: DataFrame, buckets: Int, bigBucket: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val spark = vals.sparkSession
+    val arith = bucketArith(vals, buckets)
+    def running(order: String, keys: String*) =
+      Window.partitionBy(keys.map(col): _*).orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // the unique step whose running weight `cum` crosses rank `r`
+    def crossing(cum: String, step: String, r: String): Column =
+      col(cum) >= col(r) && col(cum) - col(step) < col(r)
     val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b", expr("(v - vmin) div w"))
-    val hist = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("cnt")).over(wCum))
+      .withColumn("b", arith.bucket)
+    val target = bucketed.groupBy("g", "b")
+      .agg(sum(col("wt")).as("wsum"), count(lit(1)).as("cnt"))
+      .withColumn("cum", sum(col("wsum")).over(running("b", "g")))
       .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
+      .filter(crossing("cum", "wsum", "k"))
       .select(col("g"), col("q"), col("n"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("cnt"))).as("residual"),
+        (col("k") - (col("cum") - col("wsum"))).as("residual"),
         col("cnt").as("bcnt"))
     val tRows = target.collect() // pass 1 (the histogram) executes here
     val (bigRows, smallRows) = tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
     val outSchema = StructType(Seq(target.schema("g"),
       StructField("q", StringType), StructField("n", LongType),
-      StructField("k", LongType), StructField("v", LongType)))
+      StructField("k", LongType), StructField("v", vals.schema("v").dataType)))
     def probe(targets: DataFrame): DataFrame =
       bucketed.as("x").join(broadcast(targets.as("t")),
           col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
         .select(col("x.g").as("g"), col("t.q").as("q"), col("t.n").as("n"),
-          col("t.k").as("k"), col("x.v").as("v"), col("x.vmin").as("vmin"),
-          col("x.w").as("w"), col("t.tb").as("tb"),
+          col("t.k").as("k"), col("x.v").as("v"), col("x.wt").as("wt"),
+          col("x.vmin").as("vmin"), col("x.w").as("w"), col("t.tb").as("tb"),
           col("t.residual").as("residual"))
-    def rankWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-      probed.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === col(residualCol))
+    def rankWithin(probed: DataFrame, residualCol: String): DataFrame =
+      probed.withColumn("runw", sum(col("wt")).over(running("v", "g", "q")))
+        .filter(crossing("runw", "wt", residualCol))
         .select("g", "q", "n", "k", "v")
-    }
     // bounded buckets: rank directly (one task holds ≤ bigBucket rows)
     val small = if (smallRows.isEmpty) None
       else Some(rankWithin(probe(frameOf(spark, smallRows, target.schema)), "residual"))
@@ -733,146 +798,26 @@ object Profiling {
     val big = if (bigRows.isEmpty) None else {
       val bigF = frameOf(spark, bigRows, target.schema)
       val probedBig = probe(bigF)
-        .withColumn("w2", expr(s"greatest(1L, (w - 1L) div ${buckets}L + 1L)"))
-        .withColumn("b2", expr("(v - vmin - tb * w) div w2"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
+        .withColumn("w2", arith.subWidth)
+        .withColumn("b2", arith.subBucket)
       val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(count(lit(1)).as("cnt2"),
+        .agg(sum(col("wt")).as("wsum2"),
           min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("cnt2")).over(wCum2))
+        .withColumn("cum2", sum(col("wsum2")).over(running("b2", "g", "q")))
         .join(broadcast(bigF.select("g", "q", "n", "k", "residual")),
           Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
+        .filter(crossing("cum2", "wsum2", "residual"))
         .select(col("g"), col("q"), col("n"), col("k"), col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("cnt2"))).as("residual2"),
-          col("bmin"), col("bmax"))
+          (col("residual") - (col("cum2") - col("wsum2"))).as("residual2"),
+          col("bmin"), (col("bmin") === col("bmax")).as("single"))
       val t2Rows = target2.collect() // sub-histogram pass executes here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Long]("bmin") == r.getAs[Long]("bmax"))
+      val (constRows, variedRows) = t2Rows.partition(_.getAs[Boolean]("single"))
       // heavy single value: the target sub-bucket IS bmin — the answer is
       // already on the driver as metadata, no ranking task at all
       val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("n"), r.getAs[Long]("k"),
-          r.getAs[Long]("bmin"))), outSchema))
-      val varied = if (variedRows.isEmpty) None
-        else Some(rankWithin(
-          probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
-              .select("g", "q", "tb2", "residual2")), Seq("g", "q"))
-            .filter(col("b2") === col("tb2")), "residual2"))
-      (const2.toSeq ++ varied.toSeq).reduceOption(_ unionByName _)
-    }
-    (small.toSeq ++ big.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(frameOf(spark, Nil, outSchema))
-  }
-
-  /** Per-group count/min/max/bucket-width for DOUBLE values — the
-    * [[groupStats]] twin for [[selectDoubleAtRanks]]. Width is double
-    * arithmetic; `greatest(…, MIN_NORMAL)` keeps it positive when a
-    * group holds a single distinct value (bucket 0 for every row). */
-  private def groupStatsDouble(vals: org.apache.spark.sql.DataFrame,
-      buckets: Int): org.apache.spark.sql.DataFrame =
-    literalize(
-      vals.groupBy("g").agg(count(lit(1)).as("n"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w", greatest(
-          (col("vmax") - col("vmin")) / lit(buckets.toDouble),
-          lit(java.lang.Double.MIN_NORMAL))))
-
-  /** DOUBLE-valued twin of [[selectAtRanks]]: exact k-th order statistics
-    * of a (g, v: double) frame without a global sort or a single-task
-    * value buffer — the engine behind [[exactPercentilesUngrouped]].
-    * Bucket ids are double arithmetic (`floor((v − vmin) / w)`): FP
-    * rounding can only move a bucket BOUNDARY, never reorder values —
-    * bucket assignment stays monotone in v, which is the only property
-    * the running-count rank location needs; the residual rank resolves
-    * by ordering the one target bucket's rows by v itself. Same
-    * oversize-bucket sub-histogram recursion and single-valued-bucket
-    * shortcut as the long engine (bmin/bmax compared as doubles).
-    * Contract: finite values (no NaN; −0.0 and 0.0 are not
-    * distinguished), low-cardinality `g`. */
-  private def selectDoubleAtRanks(
-      vals: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame,
-      ranks: org.apache.spark.sql.DataFrame, buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    val spark = vals.sparkSession
-    val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b",
-        floor((col("v") - col("vmin")) / col("w")).cast("long"))
-    val hist = bucketed.groupBy("g", "b").agg(count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("cnt")).over(wCum))
-      .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
-      .select(col("g"), col("q"), col("n"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("cnt"))).as("residual"),
-        col("cnt").as("bcnt"))
-    val tRows = target.collect() // pass 1 (the histogram) executes here
-    val (bigRows, smallRows) = tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
-    val outSchema = StructType(Seq(target.schema("g"),
-      StructField("q", StringType), StructField("n", LongType),
-      StructField("k", LongType), StructField("v", DoubleType)))
-    def probe(targets: DataFrame): DataFrame =
-      bucketed.as("x").join(broadcast(targets.as("t")),
-          col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
-        .select(col("x.g").as("g"), col("t.q").as("q"), col("t.n").as("n"),
-          col("t.k").as("k"), col("x.v").as("v"), col("x.vmin").as("vmin"),
-          col("x.w").as("w"), col("t.tb").as("tb"),
-          col("t.residual").as("residual"))
-    def rankWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-      probed.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === col(residualCol))
-        .select("g", "q", "n", "k", "v")
-    }
-    val small = if (smallRows.isEmpty) None
-      else Some(rankWithin(probe(frameOf(spark, smallRows, target.schema)), "residual"))
-    val big = if (bigRows.isEmpty) None else {
-      val bigF = frameOf(spark, bigRows, target.schema)
-      val probedBig = probe(bigF)
-        .withColumn("w2", greatest(col("w") / lit(buckets.toDouble),
-          lit(java.lang.Double.MIN_NORMAL)))
-        .withColumn("b2", floor(
-          (col("v") - (col("vmin") + col("tb") * col("w"))) / col("w2"))
-          .cast("long"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
-      val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(count(lit(1)).as("cnt2"),
-          min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("cnt2")).over(wCum2))
-        .join(broadcast(bigF.select("g", "q", "n", "k", "residual")),
-          Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
-        .select(col("g"), col("q"), col("n"), col("k"), col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("cnt2"))).as("residual2"),
-          col("bmin"), col("bmax"))
-      val t2Rows = target2.collect() // sub-histogram pass executes here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Double]("bmin") == r.getAs[Double]("bmax"))
-      // heavy single value: the target sub-bucket IS bmin — answered from
-      // driver metadata, no ranking task
-      val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("n"), r.getAs[Long]("k"),
-          r.getAs[Double]("bmin"))), outSchema))
+        else Some(frameOf(spark, constRows.map(r => Row.fromSeq(
+          Seq("g", "q", "n", "k", "bmin").map(c => r.get(r.fieldIndex(c))))),
+          outSchema))
       val varied = if (variedRows.isEmpty) None
         else Some(rankWithin(
           probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
@@ -889,20 +834,20 @@ object Profiling {
     * `percentile(c, p)` bit-for-bit (continuous position `p·(n−1)`, the
     * `(higher−pos)·lo + (pos−lower)·hi` IEEE interpolation, and the
     * integral-position / equal-key shortcuts, all straight from
-    * Percentile.getPercentile) — but through [[selectDoubleAtRanks]]'s
+    * Percentile.getPercentile) — but through [[selectAtRanks]]'s
     * two bracketing order statistics instead of the built-in's
     * TypedImperativeAggregate, whose final task merges a buffer holding
     * EVERY distinct value with its count (the q70 cliff in ungrouped
     * form: one JVM owns the whole column at 100 TB). Returns one
     * (g = column name, n, p_exact) row per column; an all-NULL column
     * yields no row (the built-in returns NULL there). */
-  def exactPercentilesUngrouped(df: org.apache.spark.sql.DataFrame,
+  def exactPercentilesUngrouped(df: DataFrame,
       cols: Seq[String], percentage: Double,
-      bigBucket: Long = BigBucketRows): org.apache.spark.sql.DataFrame = {
-    val vals = df.select(explode(array(cols.map(c =>
+      bigBucket: Long = BigBucketRows): DataFrame = {
+    val vals = unitWeight(df.select(explode(array(cols.map(c =>
         struct(lit(c).as("g"), col(c).cast("double").as("v"))): _*)).as("p"))
-      .select("p.*").filter(col("v").isNotNull)
-    val stats = groupStatsDouble(vals, GroupMedianBuckets)
+      .select("p.*").filter(col("v").isNotNull))
+    val stats = groupStats(vals, GroupMedianBuckets)
     // continuous position pos = p·(n−1) in DOUBLE (exactly the built-in's
     // arithmetic — never integer rank fractions here, they round the
     // other side of an integer for some (p, n))
@@ -914,8 +859,7 @@ object Profiling {
         (col("lower") + 1L).as("k"))
       .unionByName(fr.select(col("g"), lit("hi").as("q"), col("n"),
         (col("higher") + 1L).as("k")))
-    val sel = selectDoubleAtRanks(vals, stats, ranks,
-      GroupMedianBuckets, bigBucket)
+    val sel = selectAtRanks(vals, stats, ranks, GroupMedianBuckets, bigBucket)
     val wide = sel.groupBy("g").agg(max(col("n")).as("n"),
       max(when(col("q") === "lo", col("v"))).as("vlo"),
       max(when(col("q") === "hi", col("v"))).as("vhi"))
@@ -927,123 +871,6 @@ object Profiling {
             (col("higher").cast("double") - col("pos")) * col("vlo") +
               (col("pos") - col("lower").cast("double")) * col("vhi"))
           .as("p_exact"))
-  }
-
-  /** WEIGHTED order statistics without a global sort — the weight-aware
-    * twin of [[bucketedQuantileSelect]]: `vals` is a (g, v, wt) frame
-    * with POSITIVE integer weights (contract: wt ≥ 1 — zero/negative
-    * weights break the running-weight monotonicity the crossing rule
-    * needs), and the target is the smallest v whose cumulative weight
-    * reaches rank ceil(num·W/den) of the group's total weight W —
-    * exactly the value the wt-times-expanded multiset's unweighted
-    * order statistic would give, at the cost of the COMPACT frame. Same
-    * two-level discipline: pass 1 sums weights per equi-width bucket
-    * (≤ groups×buckets metadata rows); pass 2 resolves the crossing
-    * INSIDE the one target bucket by a running-weight window, with the
-    * same oversize-bucket sub-histogram and single-valued-bucket
-    * shortcut as the unweighted engine — the straggler bound is on
-    * bucket ROW count, identical to [[selectAtRanks]]. */
-  private[graft] def weightedQuantileSelect(
-      vals: org.apache.spark.sql.DataFrame,
-      quantiles: Seq[(String, Long, Long)], buckets: Int,
-      bigBucket: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = vals.sparkSession
-    import spark.implicits._
-    val qdf = quantiles.toDF("q", "num", "den")
-    val stats = literalize(
-      vals.groupBy("g").agg(sum(col("wt")).as("wtot"),
-          min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-        .withColumn("w",
-          expr(s"greatest(1L, (vmax - vmin) div ${buckets}L + 1L)")))
-    val ranks = stats.crossJoin(qdf)
-      .select(col("g"), col("q"), col("wtot"),
-        expr("(num * wtot + den - 1L) div den").as("k"))
-    val bucketed = vals.join(broadcast(stats), "g")
-      .withColumn("b", expr("(v - vmin) div w"))
-    val hist = bucketed.groupBy("g", "b")
-      .agg(sum(col("wt")).as("wsum"), count(lit(1)).as("cnt"))
-    val wCum = Window.partitionBy("g").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFirst = Window.partitionBy("g", "q").orderBy("b")
-    val target = hist.withColumn("cum", sum(col("wsum")).over(wCum))
-      .join(broadcast(ranks), "g")
-      .filter(col("cum") >= col("k"))
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") <= 1)
-      .select(col("g"), col("q"), col("wtot"), col("k"), col("b").as("tb"),
-        (col("k") - (col("cum") - col("wsum"))).as("residual"),
-        col("cnt").as("bcnt"))
-    val tRows = target.collect() // pass 1 (the weighted histogram) runs here
-    val (bigRows, smallRows) =
-      tRows.partition(_.getAs[Long]("bcnt") > bigBucket)
-    val outSchema = StructType(Seq(target.schema("g"),
-      StructField("q", StringType), StructField("wtot", LongType),
-      StructField("k", LongType), StructField("v", LongType)))
-    def probe(targets: DataFrame): DataFrame =
-      bucketed.as("x").join(broadcast(targets.as("t")),
-          col("x.g") === col("t.g") && col("x.b") === col("t.tb"))
-        .select(col("x.g").as("g"), col("t.q").as("q"),
-          col("t.wtot").as("wtot"), col("t.k").as("k"),
-          col("x.v").as("v"), col("x.wt").as("wt"),
-          col("x.vmin").as("vmin"), col("x.w").as("w"),
-          col("t.tb").as("tb"), col("t.residual").as("residual"))
-    // smallest v whose running weight reaches the residual rank — runw is
-    // strictly increasing in the frame order (wt ≥ 1), so the first
-    // crossing row is unique and deterministic
-    def crossWithin(probed: DataFrame, residualCol: String): DataFrame = {
-      val w = Window.partitionBy("g", "q").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      probed.withColumn("runw", sum(col("wt")).over(w))
-        .filter(col("runw") >= col(residualCol))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("g", "q").orderBy("runw")))
-        .filter(col("rn") === 1)
-        .select("g", "q", "wtot", "k", "v")
-    }
-    val small = if (smallRows.isEmpty) None
-      else Some(crossWithin(
-        probe(frameOf(spark, smallRows, target.schema)), "residual"))
-    val big = if (bigRows.isEmpty) None else {
-      val bigF = frameOf(spark, bigRows, target.schema)
-      val probedBig = probe(bigF)
-        .withColumn("w2", expr(s"greatest(1L, (w - 1L) div ${buckets}L + 1L)"))
-        .withColumn("b2", expr("(v - vmin - tb * w) div w2"))
-      val wCum2 = Window.partitionBy("g", "q").orderBy("b2")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wFirst2 = Window.partitionBy("g", "q").orderBy("b2")
-      val target2 = probedBig.groupBy("g", "q", "b2")
-        .agg(sum(col("wt")).as("wsum2"),
-          min(col("v")).as("bmin"), max(col("v")).as("bmax"))
-        .withColumn("cum2", sum(col("wsum2")).over(wCum2))
-        .join(broadcast(bigF.select("g", "q", "wtot", "k", "residual")),
-          Seq("g", "q"))
-        .filter(col("cum2") >= col("residual"))
-        .withColumn("rn", row_number().over(wFirst2))
-        .filter(col("rn") <= 1)
-        .select(col("g"), col("q"), col("wtot"), col("k"),
-          col("b2").as("tb2"),
-          (col("residual") - (col("cum2") - col("wsum2"))).as("residual2"),
-          col("bmin"), col("bmax"))
-      val t2Rows = target2.collect() // sub-histogram pass runs here
-      val (constRows, variedRows) =
-        t2Rows.partition(r => r.getAs[Long]("bmin") == r.getAs[Long]("bmax"))
-      val const2 = if (constRows.isEmpty) None
-        else Some(frameOf(spark, constRows.map(r => Row(
-          r.get(r.fieldIndex("g")), r.getAs[String]("q"),
-          r.getAs[Long]("wtot"), r.getAs[Long]("k"),
-          r.getAs[Long]("bmin"))), outSchema))
-      val varied = if (variedRows.isEmpty) None
-        else Some(crossWithin(
-          probedBig.join(broadcast(frameOf(spark, variedRows, target2.schema)
-              .select("g", "q", "tb2", "residual2")), Seq("g", "q"))
-            .filter(col("b2") === col("tb2")), "residual2"))
-      (const2.toSeq ++ varied.toSeq).reduceOption(_ unionByName _)
-    }
-    (small.toSeq ++ big.toSeq).reduceOption(_ unionByName _)
-      .getOrElse(frameOf(spark, Nil, outSchema))
   }
 
   /** q163: quantity-weighted median price — "the median unit shipped"
@@ -1329,7 +1156,7 @@ object Profiling {
     import graft.functions.Functions.round4
     val spark = events.sparkSession
     import spark.implicits._
-    val vals = eventMicroVals(events)
+    val vals = unitWeight(eventMicroVals(events))
     val stats = groupStats(vals, GroupMedianBuckets)
     val qdf = QuantileSpecs.toDF("q", "num", "den")
     // continuous rank r = 1 + num·(n−1)/den; bracket = (kLo, kLo + (m>0))

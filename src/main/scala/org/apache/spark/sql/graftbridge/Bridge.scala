@@ -16,11 +16,8 @@ object Bridge {
   private def classicDf(df: DataFrame): org.apache.spark.sql.classic.Dataset[_] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
 
-  /** Analyzed logical plan of a frame (for plan-rewrite tests). */
+  /** Analyzed logical plan of a frame. */
   def analyzed(df: DataFrame): LogicalPlan = classicDf(df).queryExecution.analyzed
-
-  /** Optimized logical plan of a frame. */
-  def optimized(df: DataFrame): LogicalPlan = classicDf(df).queryExecution.optimizedPlan
 
   /** Execute an arbitrary logical plan as a DataFrame. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

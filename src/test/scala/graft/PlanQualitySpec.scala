@@ -121,8 +121,7 @@ class PlanQualitySpec extends SparkSpec {
 
   test("q08: raw keep-first window idiom gets the WindowGroupLimit trim") {
     // q08 deliberately spells the raw row_number()=1 idiom (the
-    // KeepFirstToAggregate rule's target — extension-session behavior is
-    // pinned in PlansSpec); in a plain session it must at least plan the
+    // keep-first window users write by hand); it must at least plan the
     // per-partition top-1 trim and a single hash exchange.
     val p = planOf("q08_dedup_key_keepfirst")
     assert(p.contains("WindowGroupLimit"), s"no per-key limit pushdown:\n$p")
@@ -789,8 +788,9 @@ class PlanQualitySpec extends SparkSpec {
       // hash partitioning satisfies their clustered distributions. The
       // earlier distinct-then-repartition order shuffled the edges twice.
       val buildPlan = edges.queryExecution.executedPlan.toString
-      // round 14: the build width is scale-derived (~64 MB/partition from
-      // the input estimate), so at test SF the src exchange degenerates
+      // round 14: the build width is scale-derived (4 partitions per MB
+      // of input estimate — ~1 MB per partition with x4 fan-out headroom
+      // — clamped to the session width), so at test SF the src exchange degenerates
       // to SinglePartition — still one src-colocating exchange
       assert("Exchange hashpartitioning\\(src#\\d+L, \\d".r
         .findFirstIn(buildPlan).isDefined ||

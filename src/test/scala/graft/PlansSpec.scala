@@ -1,74 +1,10 @@
 package graft
 
-import graft.plans.KeepFirstToAggregate
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-
-/** [[graft.plans.KeepFirstToAggregate]]: the rewrite fires on the
-  * keep-first window idiom, preserves results, and declines the patterns
-  * it cannot prove safe. */
+/** Keep-first dedup regimes: the native node against the explicit
+  * aggregate form ([[graft.pipeline.Clean.dedupKeepFirstAgg]]). */
 class PlansSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def keepFirstDf = {
-    val df = Seq(
-      ("a", 3, "x"), ("a", 1, "y"), ("a", 1, "y"), ("b", 2, "z"),
-      ("b", 5, "w"), ("c", 4, "q"))
-      .toDF("k", "o", "v")
-    val w = Window.partitionBy("k").orderBy(col("o").asc_nulls_first,
-      col("v").asc_nulls_first)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-  }
-
-  private def hasWindow(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-    p.collect { case w: LWindow => w }.nonEmpty
-  private def hasAgg(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-    p.collect { case a: Aggregate => a }.nonEmpty
-
-  test("rewrite fires, kills the Window, and preserves the result") {
-    val original = keepFirstDf
-    // the rule registers in the user optimizer batch, i.e. it sees plans the
-    // main batches already simplified (Filter adjacent to Window)
-    val rewritten = KeepFirstToAggregate(Bridge.optimized(original))
-    assert(!hasWindow(rewritten), "Window survived the rewrite")
-    assert(hasAgg(rewritten), "no Aggregate produced")
-    val expect = original.drop("__rn").collect().map(_.toSeq).toSet
-    val got = Bridge.ofRows(spark, rewritten).drop("__rn").collect()
-      .map(_.toSeq).toSet
-    assert(got == expect)
-    // the rank column itself is constant-folded to 1
-    assert(Bridge.ofRows(spark, rewritten).select("__rn").distinct().collect()
-      .map(_.getInt(0)).toSeq == Seq(1))
-  }
-
-  test("rewrite preserves the keep-first pick on the real dirty domain") {
-    val df = pipeline.OrdersDomain.dirtyFromTpch(spark, sf)
-    val ord = pipeline.Clean.KeepFirstTiebreak.map(c => col(c).asc_nulls_first)
-    val w = Window.partitionBy("order_id").orderBy(ord: _*)
-    val windowed = df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val rewritten = Bridge.ofRows(spark, KeepFirstToAggregate(Bridge.optimized(windowed)))
-    assert(rewritten.exceptAll(windowed).count() == 0)
-    assert(windowed.exceptAll(rewritten).count() == 0)
-  }
-
-  test("declines: rank != 1, descending order, global window") {
-    val df = Seq(("a", 1), ("b", 2)).toDF("k", "o")
-    val byK = Window.partitionBy("k").orderBy(col("o"))
-    val second = df.withColumn("r", row_number().over(byK)).filter(col("r") === 2)
-    assert(hasWindow(KeepFirstToAggregate(Bridge.optimized(second))))
-    val desc = df.withColumn("r",
-      row_number().over(Window.partitionBy("k").orderBy(col("o").desc)))
-      .filter(col("r") === 1)
-    assert(hasWindow(KeepFirstToAggregate(Bridge.optimized(desc))))
-    val global = df.withColumn("r",
-      row_number().over(Window.orderBy(col("o")))).filter(col("r") === 1)
-    assert(hasWindow(KeepFirstToAggregate(Bridge.optimized(global))))
-  }
 
   test("regime dial: at large duplication factor d the aggregate form's map-side combine shuffles ~1/d of the rows; the native form shuffles all of them") {
     // the documented dial (KeepFirstNative.scala): native wins for small d
@@ -102,34 +38,5 @@ class PlansSpec extends SparkSpec {
     // partial-agg output is bounded by keys × input tasks (200 × 4), far
     // below the 10 000 input rows — the combine is engaged
     assert(sAgg <= keys.toLong * 4, s"aggregate combine did not collapse dups: wrote $sAgg")
-  }
-
-  test("extension-registered sessions plan keep-first windows as aggregates") {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val df = s2.createDataFrame(Seq(("a", 2, "x"), ("a", 1, "y"), ("b", 7, "z")))
-        .toDF("k", "o", "v")
-      val w = Window.partitionBy("k").orderBy(col("o").asc_nulls_first,
-        col("v").asc_nulls_first)
-      val kept = df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      assert(!hasWindow(Bridge.optimized(kept)), "extension rule did not fire")
-      // the limiter's sort must go too, or the rewrite saves nothing
-      assert(Bridge.optimized(kept).collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
-      }.isEmpty, "WindowGroupLimit (and its sort) survived")
-      assert(kept.orderBy("k").collect().map(r => (r.getString(0), r.getInt(1)))
-        .toSeq == Seq(("a", 1), ("b", 7)))
-    } finally {
-      SparkSession.setDefaultSession(SparkSpec.spark)
-      SparkSession.setActiveSession(SparkSpec.spark)
-    }
   }
 }

@@ -142,9 +142,12 @@ class ProfilingSpec extends SparkSpec {
       }
     }
     // edge frame: odd/even counts (integral and .5 positions), a single-
-    // distinct-value column, a null-carrying column, and sub-cent value
-    // spacing (quantization-hostile); bigBucket = 0 forces the recursive
-    // sub-histogram + const-bucket branches on the same frame
+    // distinct-value column, a null-carrying column, sub-cent value
+    // spacing (quantization-hostile), and a cluster next to one far
+    // outlier (the whole cluster lands in ONE first-level bucket);
+    // bigBucket = 0 forces the recursive branches on the same frame —
+    // the const-bucket shortcut (a-d) and ranking inside a many-valued
+    // sub-bucket (e)
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     val n = 1001
@@ -152,10 +155,11 @@ class ProfilingSpec extends SparkSpec {
       (rnd.nextDouble() * 1e-4 + 1.0,         // tight range, distinct doubles
         if (i <= 1000) rnd.nextInt(100) / 7.0 else Double.NaN, // even count via null below
         42.42,                                 // single distinct value
-        rnd.nextInt(5000) / 100.0)
-    }.toDF("a", "b0", "c", "d")
+        rnd.nextInt(5000) / 100.0,
+        if (i < n) rnd.nextInt(100000) / 100.0 else 1e9) // cluster + outlier
+    }.toDF("a", "b0", "c", "d", "e")
       .withColumn("b", when(col("b0").isNaN, lit(null)).otherwise(col("b0")))
-    val cols2 = Seq("a", "b", "c", "d")
+    val cols2 = Seq("a", "b", "c", "d", "e")
     for (p <- Seq(0.5, 0.25); bb <- Seq(Profiling.BigBucketRows, 0L)) {
       val builtin = df.agg(
           expr(s"percentile(${cols2.head}, $p)").as(cols2.head),

@@ -636,39 +636,84 @@ class PropertySpec extends SparkSpec {
     // crossing regularly lands INSIDE a run of ties
     val rows = (1 to 400).map(_ =>
       ("a", rnd.nextInt(50).toLong * 3, 1L + rnd.nextInt(9))) ++
-      (1 to 300).map(_ => ("b", rnd.nextInt(1000).toLong, 1L + rnd.nextInt(4)))
+      (1 to 300).map(_ => ("b", rnd.nextInt(1000).toLong, 1L + rnd.nextInt(4))) ++
+      // a cluster next to one far outlier: the whole cluster lands in ONE
+      // first-level bucket, so the forced recursion below ranks inside a
+      // many-valued sub-bucket (a and b recurse into single-valued
+      // sub-buckets — the metadata shortcut)
+      (1 to 300).map(_ => ("c", rnd.nextInt(100000).toLong, 1L + rnd.nextInt(5))) :+
+      (("c", 1000000000L, 1L))
     val df = rows.toDF("g", "v", "wt")
     val quantiles = Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p90", 9L, 10L))
     val got = Profiling.weightedQuantileSelect(
       df, quantiles, 256, 10000L).collect()
     // ground truth: expand each row wt times, take the unweighted order
     // statistic at rank ceil(num·W/den)
-    rows.groupBy(_._1).foreach { case (g, grp) =>
-      val expanded = grp.flatMap(r => Seq.fill(r._3.toInt)(r._2)).sorted
-      val wTot = expanded.length.toLong
-      quantiles.foreach { case (q, num, den) =>
-        val k = (num * wTot + den - 1) / den
-        val want = expanded((k - 1).toInt)
-        val r = got.find(r => r.getAs[String]("g") == g &&
-          r.getAs[String]("q") == q).get
-        assert(r.getAs[Long]("v") == want && r.getAs[Long]("wtot") == wTot &&
-          r.getAs[Long]("k") == k, s"$g/$q: got $r want $want (k=$k W=$wTot)")
+    def check(sel: Array[org.apache.spark.sql.Row],
+        rs: Seq[(String, Long, Long)], total: String, what: String): Unit =
+      rs.groupBy(_._1).foreach { case (g, grp) =>
+        val expanded = grp.flatMap(r => Seq.fill(r._3.toInt)(r._2)).sorted
+        val wTot = expanded.length.toLong
+        quantiles.foreach { case (q, num, den) =>
+          val k = (num * wTot + den - 1) / den
+          val want = expanded((k - 1).toInt)
+          val r = sel.find(r => r.getAs[String]("g") == g &&
+            r.getAs[String]("q") == q).get
+          assert(r.getAs[Long]("v") == want && r.getAs[Long](total) == wTot &&
+            r.getAs[Long]("k") == k,
+            s"$what $g/$q: got $r want $want (k=$k W=$wTot)")
+        }
       }
-    }
+    check(got, rows, "wtot", "direct")
     // wt = 1 everywhere degenerates to the unweighted engine exactly
     val unit = df.select(col("g"), col("v"), lit(1L).as("wt"))
-    val wu = Profiling.weightedQuantileSelect(unit, quantiles, 256, 10000L)
-      .select("g", "q", "v").collect().map(_.toSeq).toSet
-    val plain = Profiling.bucketedQuantileSelect(
-        df.select("g", "v"), quantiles, 256, 10000L)
-      .select("g", "q", "v").collect().map(_.toSeq).toSet
-    assert(wu == plain, "wt=1 weighted selection diverged from unweighted")
+    for (bb <- Seq(10000L, 0L)) {
+      val wu = Profiling.weightedQuantileSelect(unit, quantiles, 256, bb)
+        .select("g", "q", "v").collect().map(_.toSeq).toSet
+      val plain = Profiling.bucketedQuantileSelect(
+          df.select("g", "v"), quantiles, 256, bb).collect()
+      assert(wu == plain.map(r => Seq(r.get(0), r.get(1), r.get(4))).toSet,
+        s"wt=1 weighted selection diverged from unweighted (bigBucket=$bb)")
+      check(plain, rows.map(r => (r._1, r._2, 1L)), "n", s"unweighted bigBucket=$bb")
+    }
     // bigBucket = 0 forces the sub-histogram path for every target —
     // results must not move
     val rec = Profiling.weightedQuantileSelect(df, quantiles, 256, 0L)
-      .collect().map(_.toSeq).toSet
-    assert(rec == got.map(_.toSeq).toSet,
+      .collect()
+    assert(rec.map(_.toSeq).toSet == got.map(_.toSeq).toSet,
       "recursive weighted path disagrees with the direct path")
+    check(rec, rows, "wtot", "recursive")
+  }
+
+  test("intervalOverlap near Long.MaxValue ≡ brute-force overlap (property)") {
+    import graft.operators.RangeJoin
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    // 7 divides Long.MaxValue, so its last bucket ends exactly there; for
+    // 1000 the last bucket is cut short — in both, (b+1)·w is past the range
+    for (w <- Seq(7L, 1000L)) {
+      // endpoints within three bucket widths of Long.MaxValue, plus the
+      // one-point interval at Long.MaxValue itself on each side
+      def spans(tag: String) = (1 to 30).map { i =>
+        val a = Long.MaxValue - (rnd.nextDouble() * 3 * w).toLong
+        val b = Long.MaxValue - (rnd.nextDouble() * 3 * w).toLong
+        (s"$tag$i", math.min(a, b), math.max(a, b))
+      } :+ ((s"${tag}max", Long.MaxValue, Long.MaxValue))
+      val ls = spans("L")
+      val rs = spans("R")
+      val want = (for {
+        (l, llo, lhi) <- ls
+        (r, rlo, rhi) <- rs
+        if llo <= rhi && rlo <= lhi
+      } yield (l, r)).toSet
+      val got = RangeJoin.intervalOverlap(ls.toDF("lid", "llo", "lhi"),
+          rs.toDF("rid", "rlo", "rhi"), "llo", "lhi", "rlo", "rhi", w)
+        .select("lid", "rid").as[(String, String)].collect()
+      assert(want.nonEmpty)
+      assert(got.toSet == want, s"W=$w wrong pair set")
+      assert(got.length == want.size,
+        s"W=$w duplicated pairs: ${got.length} != ${want.size}")
+    }
   }
 
   test("KS/MWU vs brute force on random frames (property)") {
